@@ -1,11 +1,16 @@
 """Read-side operators (SURVEY.md §2.4-§2.7): windowed reads, subsetting,
 elementwise maps, zip-joins (broadcast), equality, concatenation.
 
-Design: every read is a *pruned scan* — ``z`` is a partition column
-(partition pruning) and ``tx``/``ty`` are top-level int columns (parquet
-min/max row-group skipping), so the viewport query touches exactly one
-level and only intersecting tiles, the Spark analogue of the reference's
-``selectlevel`` chunk-pruned read (src/PyramidScheme.jl:447-467).
+Design: a viewport read is driver-sized by construction (its output is
+bounded by ``target_imsize``, whatever the corpus size), so it launches no
+Spark job: ``catalog.read_level_rows_local`` reads only the planned level's
+intersecting tiles with pyarrow — filewise/delta files outside the window
+are skipped by name, and ``tx``/``ty`` range filters prune row groups by
+their min/max stats — the analogue of the reference's ``selectlevel``
+chunk-pruned read (src/PyramidScheme.jl:447-467). Whole-pyramid operators
+stay distributed *pruned scans*: ``z`` is a partition column (partition
+pruning) and ``tx``/``ty`` are top-level int columns (parquet row-group
+skipping).
 """
 
 from __future__ import annotations
@@ -17,12 +22,32 @@ from pyspark.sql import functions as F
 
 from ..functions.codec import decode_tile, encode_tile
 from ..plans.grid import agg_axis, extents_intersect, plan_window
-from ..sources.catalog import TILE_SCHEMA, read_level
-from .build import PyramidSpec, _rows_to_pdf, _tile_row
+from ..sources.catalog import TILE_SCHEMA, read_level_rows_local, stored_levels
+from .build import PyramidSpec, _rows_to_pdf
 
 # ---------------------------------------------------------------------------
 # L1-L3 + F1-F3: windowed viewport read
 # ---------------------------------------------------------------------------
+
+
+def _stitch(rows: pd.DataFrame, tilesize: int, px0: int, py0: int, px1: int, py1: int) -> np.ndarray:
+    """Paste decoded tile rows into the level-pixel window ``[px0, px1) x
+    [py0, py1)``, cropping each tile to the window; dtype and band count
+    come from the first row."""
+    c = int(rows["c"].iloc[0])
+    shape = (py1 - py0, px1 - px0) + ((c,) if c > 1 else ())
+    out = np.zeros(shape, dtype=np.dtype(rows["dtype"].iloc[0]))
+    for r in rows.itertuples(index=False):
+        gx0, gy0 = r.tx * tilesize, r.ty * tilesize  # level-pixel origin of the tile
+        sx0, sy0 = max(px0, gx0), max(py0, gy0)
+        sx1, sy1 = min(px1, gx0 + r.w), min(py1, gy0 + r.h)
+        if sx1 <= sx0 or sy1 <= sy0:
+            continue
+        a = decode_tile(r.bytes, r.h, r.w, r.dtype, r.c)
+        out[sy0 - py0 : sy1 - py0, sx0 - px0 : sx1 - px0] = a[
+            sy0 - gy0 : sy1 - gy0, sx0 - gx0 : sx1 - gx0
+        ]
+    return out
 
 
 def read_window(
@@ -34,38 +59,33 @@ def read_window(
 ):
     """The signature read query (reference ``plot``/``selectlevel`` loop,
     ext/PyramidSchemeMakieExt.jl:55-106): pick the level for the viewport,
-    scan only intersecting tiles of that level, crop, assemble.
+    read only intersecting tiles of that level, crop, assemble.
 
     Returns ``(array, x_axis, y_axis, z)``; array is ``<= target_imsize``
-    by construction so the driver-side assembly is small. Non-intersecting
-    extent short-circuits to an empty array (reference :456).
+    by construction, so the read is a driver-local pyarrow read with
+    row-group pruning (``catalog.read_level_rows_local``) and launches no
+    Spark job — ``spark`` is unused and kept for the operator signature.
+    A plan that picks z=0 on a levels-only pyramid (``materialize_base=
+    False``: no ``tiles/z=0`` on disk) reads the finest stored level
+    instead and returns that ``z``; any other missing level raises
+    ``FileNotFoundError``. Non-intersecting extent short-circuits to an
+    empty array (reference :456).
     """
     base_ext = (0.0, 0.0, float(spec.base_w), float(spec.base_h))
     if not extents_intersect(extent, base_ext):
         return np.zeros((0, 0)), np.zeros(0), np.zeros(0), 0
-    p = plan_window((spec.base_w, spec.base_h), spec.nlevels, extent, target_imsize, spec.tilesize)
-    rows = (
-        read_level(spark, path, p.z)
-        .where(F.col("tx").between(p.tx0, p.tx1) & F.col("ty").between(p.ty0, p.ty1))
-        .collect()
-    )
-    if not rows:
+    base_shape = (spec.base_w, spec.base_h)
+    p = plan_window(base_shape, spec.nlevels, extent, target_imsize, spec.tilesize)
+    if p.z == 0:
+        zs = stored_levels(path)
+        if zs and zs[0] > 0:  # levels-only pyramid: no z=0 on disk
+            p = plan_window(
+                base_shape, spec.nlevels, extent, target_imsize, spec.tilesize, min_level=zs[0]
+            )
+    rows = read_level_rows_local(path, p.z, (p.tx0, p.tx1, p.ty0, p.ty1))
+    if not len(rows):
         return np.zeros((0, 0)), np.zeros(0), np.zeros(0), p.z
-    dt = rows[0]["dtype"]
-    c = rows[0]["c"]
-    shape = (p.py1 - p.py0, p.px1 - p.px0) + ((c,) if c > 1 else ())
-    out = np.zeros(shape, dtype=np.dtype(dt))
-    T_ = spec.tilesize
-    for r in rows:
-        a = decode_tile(r["bytes"], r["h"], r["w"], r["dtype"], r["c"])
-        gx0, gy0 = r["tx"] * T_, r["ty"] * T_  # level-pixel origin of the tile
-        sx0, sy0 = max(p.px0, gx0), max(p.py0, gy0)
-        sx1, sy1 = min(p.px1, gx0 + r["w"]), min(p.py1, gy0 + r["h"])
-        if sx1 <= sx0 or sy1 <= sy0:
-            continue
-        out[sy0 - p.py0 : sy1 - p.py0, sx0 - p.px0 : sx1 - p.px0] = a[
-            sy0 - gy0 : sy1 - gy0, sx0 - gx0 : sx1 - gx0
-        ]
+    out = _stitch(rows, spec.tilesize, p.px0, p.py0, p.px1, p.py1)
     # midpoint axes (agg_axis semantics, ref src/PyramidScheme.jl:297-304)
     base_x = np.arange(spec.base_w, dtype=np.float64) + 0.5
     base_y = np.arange(spec.base_h, dtype=np.float64) + 0.5
@@ -77,19 +97,16 @@ def read_window(
 def read_level_array(spark: SparkSession, path: str, spec: PyramidSpec, z: int) -> np.ndarray:
     """P3 eager read: stitch one stored level into a single numpy array
     (the reference's ``read(pyr) = modify(Array, pyr)`` materialization,
-    src/PyramidScheme.jl:109-116, per level). Driver-sized by definition —
-    viewport queries should use ``read_window`` instead."""
-    rows = read_level(spark, path, z).collect()
-    if not rows:
+    src/PyramidScheme.jl:109-116, per level). Driver-sized by definition,
+    so it is the same driver-local pyarrow read as ``read_window`` with no
+    window bounds — viewport queries should use ``read_window`` instead."""
+    rows = read_level_rows_local(path, z)
+    if not len(rows):
         return np.zeros((0, 0))
-    dt, c, T_ = rows[0]["dtype"], int(rows[0]["c"]), spec.tilesize
-    W = max(r["tx"] * T_ + r["w"] for r in rows)
-    H = max(r["ty"] * T_ + r["h"] for r in rows)
-    out = np.zeros((H, W, c) if c > 1 else (H, W), dtype=np.dtype(dt))
-    for r in rows:
-        a = decode_tile(r["bytes"], r["h"], r["w"], r["dtype"], r["c"])
-        out[r["ty"] * T_ : r["ty"] * T_ + r["h"], r["tx"] * T_ : r["tx"] * T_ + r["w"]] = a
-    return out
+    T_ = spec.tilesize
+    W = int((rows["tx"].astype("int64") * T_ + rows["w"]).max())
+    H = int((rows["ty"].astype("int64") * T_ + rows["h"]).max())
+    return _stitch(rows, T_, 0, 0, W, H)
 
 
 def subset_tiles(tiles: DataFrame, x0: int, x1: int, y0: int, y1: int, tilesize: int = 256) -> DataFrame:

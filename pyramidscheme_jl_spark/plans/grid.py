@@ -177,9 +177,12 @@ def plan_window(
     extent: tuple[float, float, float, float],
     target_imsize: tuple[int, int] = (1024, 512),
     tilesize: int = DEFAULT_TILESIZE,
+    min_level: int = 0,
 ) -> WindowPlan:
-    """Full read plan: level choice + tile range + pixel crop for an extent."""
-    z = select_level(base_shape, nlevels, extent, target_imsize)
+    """Full read plan: level choice + tile range + pixel crop for an extent.
+    ``min_level`` floors the level choice (the finest level stored — a
+    levels-only pyramid has no z=0)."""
+    z = max(min_level, select_level(base_shape, nlevels, extent, target_imsize))
     lw, lh = level_shape(base_shape, z)
     s = float(1 << z)
     xmin, ymin, xmax, ymax = extent

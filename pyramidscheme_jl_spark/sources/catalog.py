@@ -12,20 +12,30 @@ a level is committed iff its manifest rows exist, and manifest rows are only
 written *after* the level's parquet lands, so a crashed build resumes at the
 first level without manifest rows). Swapping in a real Iceberg catalog means
 replacing read/write here with ``spark.read.format("iceberg")`` /
-``writeTo(...).append()`` — nothing above this module changes.
+``writeTo(...).append()``, and ``read_level_rows_local`` (the driver-side
+viewport reader) with a pyiceberg/pyarrow scan planned from the table's
+manifests — nothing above this module changes.
 
 Scan-side design for scale: ``z`` is a physical partition column (partition
 pruning), and ``tx``/``ty``/``cell``/extents are top-level scalar columns so
 parquet min/max stats skip row groups for window/bbox predicates — the Spark
 analogue of the reference's chunk-pruned ``selectlevel`` read
-(src/PyramidScheme.jl:454-467).
+(src/PyramidScheme.jl:454-467). Driver-sized reads (viewports, one
+stitched level) skip Spark entirely: ``read_level_rows_local`` prunes files
+by name and row groups by the same min/max stats with pyarrow.
 """
 
 from __future__ import annotations
 
+import os
+import re
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .fsio import DEFAULT_FS, LocalFS
 
 TILE_SCHEMA = T.StructType(
     [
@@ -73,7 +83,6 @@ def write_level_driver(rows: list[dict], path: str, z: int) -> None:
     """Write a (small) level directly with pyarrow — used by tail fusion for
     the pyramid tip, where a Spark job is pure overhead. Produces the same
     layout/schema as ``write_level`` so readers can't tell the difference."""
-    import os
     import shutil
 
     import pyarrow as pa
@@ -162,8 +171,6 @@ def write_levels_fused(df: DataFrame, path: str) -> None:
 def _delta_level_names(path: str, z: int) -> list[str]:
     """Delta files in a level dir ([] for bulk/filewise/missing levels) —
     one driver-side metadata listing through the fs seam."""
-    from .fsio import DEFAULT_FS
-
     return [
         n
         for n in DEFAULT_FS.listdir(level_path(path, z))
@@ -194,6 +201,107 @@ def read_level(spark: SparkSession, path: str, z: int) -> DataFrame:
     return df.withColumn("z", F.lit(z).cast("int"))
 
 
+#: filewise tile names (``streaming.ingest._tile_fname``), flat and cube
+_TILE_NAMED = re.compile(r"tile-(\d+)-(\d+)\.parquet$")
+_TILE_NAMED_T = re.compile(r"tile-t(\d+)-(\d+)-(\d+)\.parquet$")
+#: bounds-bearing delta name (older bound-less names read unpruned)
+_DELTA_BOUNDED = re.compile(r"^delta-.*-x(\d+)-(\d+)-y(\d+)-(\d+)\.parquet$")
+
+
+def level_files_for_keys(
+    d: str, tile_ok, box_ok, with_t: bool = False, fs: LocalFS = DEFAULT_FS
+) -> list[str]:
+    """Data files of level dir ``d`` that can hold wanted keys, judged by
+    NAME alone — no footer is opened. Hidden ``.``/``_`` names (writer
+    temps, markers) are skipped the way Spark's reader skips them. A
+    filewise ``tile-[t<t>-]<tx>-<ty>`` file is kept iff ``tile_ok(key)``
+    (key = ``(t, tx, ty)`` when ``with_t``, else ``(tx, ty)``); a delta
+    file whose name carries its task's key bounds iff ``box_ok(x0, x1, y0,
+    y1)`` (inclusive bounds; they carry no t). Any other data file (bulk
+    ``part-*``, bound-less delta names) may hold any key and is kept."""
+    tile_re = _TILE_NAMED_T if with_t else _TILE_NAMED
+    out = []
+    for fname in fs.listdir(d):
+        if not fname.endswith(".parquet") or fname.startswith((".", "_")):
+            continue
+        m = tile_re.match(fname)
+        if m:
+            if not tile_ok(tuple(int(v) for v in m.groups())):
+                continue
+        else:
+            mb = _DELTA_BOUNDED.match(fname)
+            if mb and not box_ok(*(int(v) for v in mb.groups())):
+                continue
+        out.append(fname)
+    return out
+
+
+def read_level_rows_local(
+    path: str, z: int, bounds: tuple[int, int, int, int] | None = None
+) -> pd.DataFrame:
+    """Driver-local pyarrow read of level ``z``'s tiles with ``tx0 <= tx
+    <= tx1`` and ``ty0 <= ty <= ty1`` (``bounds=(tx0, tx1, ty0, ty1)``;
+    ``None`` reads the whole level): the rows ``read_level(...).where(...)
+    .collect()`` returns, without a Spark job. For driver-sized answers
+    only — a viewport is bounded by its target size, a stitched level is
+    driver-sized by definition; distributed operators use ``read_level``.
+
+    Filewise ``tile-<tx>-<ty>`` files and bounds-named delta files outside
+    the window are skipped by name (``level_files_for_keys``); the rest are
+    read with tx/ty range filters, so parquet min/max stats skip row groups
+    (the Morton-sorted layout ``write_level`` guarantees keeps them tight),
+    in a small thread pool — pyarrow drops the GIL during IO/decompress.
+    Delta versions collapse last-writer-wins on ``_ord`` with
+    ``_dedup_delta``'s keys; rows without ``_ord`` count as -1. Raises
+    ``FileNotFoundError`` naming the level dir when the level is absent."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = level_path(path, z)
+    if not DEFAULT_FS.exists(d):
+        raise FileNotFoundError(f"pyramid level {z} not stored: {d}")
+    if bounds is None:
+        files = level_files_for_keys(d, lambda k: True, lambda *b: True)
+        filters = None
+    else:
+        tx0, tx1, ty0, ty1 = bounds
+        files = level_files_for_keys(
+            d,
+            lambda k: tx0 <= k[0] <= tx1 and ty0 <= k[1] <= ty1,
+            lambda x0, x1, y0, y1: x0 <= tx1 and tx0 <= x1 and y0 <= ty1 and ty0 <= y1,
+        )
+        filters = [("tx", ">=", tx0), ("tx", "<=", tx1), ("ty", ">=", ty0), ("ty", "<=", ty1)]
+
+    def read_one(fname):
+        return pq.read_table(os.path.join(d, fname), filters=filters)
+
+    with ThreadPoolExecutor(max_workers=max(1, min(8, len(files)))) as ex:
+        tables = [t for t in ex.map(read_one, files) if t.num_rows]
+    if not tables:
+        return pd.DataFrame(columns=TILE_DATA_COLS)
+    # one pandas conversion for all files; a file without ``_ord`` reads null
+    df = pa.concat_tables(tables, promote_options="default").to_pandas()
+    if "_ord" in df.columns:
+        keys = [c for c in ("t", "tx", "ty") if c in df.columns]
+        df = (
+            df.assign(_ord=df["_ord"].fillna(-1))
+            .sort_values("_ord", ascending=False, kind="stable")
+            .drop_duplicates(keys)
+            .drop(columns="_ord")
+            .reset_index(drop=True)
+        )
+    return df
+
+
+def stored_levels(path: str) -> list[int]:
+    """Levels present on disk (``tiles/z=<n>`` dirs), ascending."""
+    return sorted(
+        int(d.split("=", 1)[1]) for d in DEFAULT_FS.listdir(f"{path}/tiles") if d.startswith("z=")
+    )
+
+
 def read_tiles(spark: SparkSession, path: str) -> DataFrame:
     """All levels; ``z`` recovered as a partition column (pruning-friendly).
 
@@ -201,13 +309,7 @@ def read_tiles(spark: SparkSession, path: str) -> DataFrame:
     a literal ``z`` per branch, so a ``z = k`` filter still constant-folds
     every other branch to an empty relation (pruning preserved); compacted
     or built pyramids take the single-scan fast path."""
-    from .fsio import DEFAULT_FS
-
-    zs = sorted(
-        int(d.split("=", 1)[1])
-        for d in DEFAULT_FS.listdir(f"{path}/tiles")
-        if d.startswith("z=")
-    )
+    zs = stored_levels(path)
     if any(_delta_level_names(path, z) for z in zs):
         parts = [
             read_level(spark, path, z).select(*[f.name for f in TILE_SCHEMA.fields])
@@ -225,7 +327,6 @@ def append_manifest(spark: SparkSession, path: str, rows: list[dict]) -> None:
     """Manifest rows are driver-side metadata (a handful per level commit) —
     written directly with pyarrow, not a Spark job. A job here would add
     seconds of fixed overhead per level for kilobytes of data."""
-    import os
     import uuid
 
     import pyarrow as pa
@@ -285,8 +386,6 @@ def manifest_lineage(
     """Per-partition lineage rows for a just-written level, from parquet
     FOOTER metadata only (row counts + file sizes) — no data pages are read
     and no Spark job runs. partition_id == output file index."""
-    import os
-
     import pyarrow.parquet as pq
 
     d = level_path(path, z)
@@ -336,7 +435,6 @@ def write_multiscales(
     reducer_hash: str,
 ) -> None:
     import json
-    import os
 
     doc = {
         "multiscales": [
@@ -365,7 +463,6 @@ def read_multiscales(path: str) -> dict | None:
     """The first multiscale entry's flattened view, or None when absent /
     unreadable (absence is normal: streaming-ingested or foreign pyramids)."""
     import json
-    import os
 
     p = os.path.join(path, MULTISCALES_FILE)
     if not os.path.exists(p):

@@ -74,7 +74,6 @@ Scale shape (per micro-batch, O(batch) work and O(1) Spark jobs):
 from __future__ import annotations
 
 import os
-import re
 
 import numpy as np
 import pandas as pd
@@ -93,7 +92,13 @@ from ..operators.build import (
     base_image_src,
     base_tile_gen,
 )
-from ..sources.catalog import TILE_DATA_COLS, TILE_SCHEMA, level_path, read_level
+from ..sources.catalog import (
+    TILE_DATA_COLS,
+    TILE_SCHEMA,
+    level_files_for_keys,
+    level_path,
+    read_level,
+)
 from ..sources.fsio import DEFAULT_FS, LocalFS
 from ..sources.synth import IMAGES_DDL
 
@@ -216,9 +221,6 @@ def _delta_fname(
         stem += f"-x{x0}-{x1}-y{y0}-{y1}"
     return stem + ".parquet"
 
-
-#: bounds-bearing delta name (older bound-less names read unpruned)
-_DELTA_BOUNDED = re.compile(r"^delta-.*-x(\d+)-(\d+)-y(\d+)-(\d+)\.parquet$")
 
 
 def _tile_table(pdf: pd.DataFrame, with_t: bool, ordinal: int):
@@ -685,8 +687,6 @@ def _read_sibling_rows_local(
 
     import pyarrow.parquet as pq
 
-    tile_named = re.compile(r"tile-(\d+)-(\d+)\.parquet$")
-    tile_named_t = re.compile(r"tile-t(\d+)-(\d+)-(\d+)\.parquet$")
     work = []  # (z-1, d, fname, ts, txs, tys, parent_set)
     for z in range(z_lo, z_hi + 1):
         parents = sorted(changed[z])
@@ -697,30 +697,14 @@ def _read_sibling_rows_local(
         ts = sorted({k[0] for k in parents}) if with_t else None
         parent_set = set(parents)
         d = level_path(path, z - 1)
-        txset, tyset = set(txs), set(tys)
-        tset = set(ts) if with_t else None
-        for fname in fs.listdir(d):
-            if not fname.endswith(".parquet") or fname.startswith((".", "_")):
-                continue
-            m = tile_named_t.match(fname) if with_t else tile_named.match(fname)
-            if m:
-                vals = [int(v) for v in m.groups()]
-                ftx, fty = vals[-2], vals[-1]
-                if ftx not in txset or fty not in tyset:
-                    continue
-                if with_t and vals[0] not in tset:
-                    continue
-                pk = (ftx >> 1, fty >> 1)
-                if ((vals[0],) + pk if with_t else pk) not in parent_set:
-                    continue
-            else:
-                mb = _DELTA_BOUNDED.match(fname)
-                if mb:
-                    x0, x1, y0, y1 = (int(v) for v in mb.groups())
-                    if not any(x0 <= t <= x1 for t in txset) or not any(
-                        y0 <= t <= y1 for t in tyset
-                    ):
-                        continue
+
+        def tile_ok(k, parent_set=parent_set):  # a sibling of a changed parent
+            return k[:-2] + (k[-2] >> 1, k[-1] >> 1) in parent_set
+
+        def box_ok(x0, x1, y0, y1, txs=txs, tys=tys):
+            return any(x0 <= t <= x1 for t in txs) and any(y0 <= t <= y1 for t in tys)
+
+        for fname in level_files_for_keys(d, tile_ok, box_ok, with_t, fs):
             work.append((z - 1, d, fname, ts, txs, tys, parent_set))
 
     def read_one(item):

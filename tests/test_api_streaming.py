@@ -1370,9 +1370,8 @@ def test_delta_name_bounds_prune_driver_tail(spark, tmp_path):
     import glob
     import os
 
-    from pyramidscheme_jl_spark.sources.catalog import level_path
+    from pyramidscheme_jl_spark.sources.catalog import _DELTA_BOUNDED, level_path
     from pyramidscheme_jl_spark.streaming.ingest import (
-        _DELTA_BOUNDED,
         _read_sibling_rows_local,
         ingest_images,
     )

@@ -356,3 +356,278 @@ def test_threshold_query_skips_tiles_via_stats(spark, pyr):
 
     with pytest.raises(KeyError):
         prune_tiles_by_stats(tiles, "add", 1.0)
+
+
+# ---------------------------------------------------------------------------
+# driver-local viewport reader: byte parity with the Spark scan, zero jobs
+# ---------------------------------------------------------------------------
+
+
+def _canon(row: dict) -> tuple:
+    """One tile row as comparable values: floats by their IEEE bits (NaN
+    stats compare equal to themselves), numpy ints as ints, the rest as-is."""
+    import struct
+
+    from pyramidscheme_jl_spark.sources.catalog import TILE_DATA_COLS
+
+    cols = (["t"] if "t" in row else []) + TILE_DATA_COLS
+    out = []
+    for c in cols:
+        v = row[c]
+        if isinstance(v, float):
+            v = struct.pack("<d", v)
+        elif isinstance(v, np.integer):
+            v = int(v)
+        out.append(v)
+    return tuple(out)
+
+
+def _assert_local_parity(spark, path, windows=((0, 0, 0, 0), (1, 2, 0, 1), (0, 9, 1, 9), None)):
+    """For every stored level and window, the driver-local read equals the
+    Spark ``read_level(...).where(...)`` collect of the same window, byte
+    for byte (``None`` = the whole level). Returns the row count compared."""
+    from pyspark.sql import functions as F
+
+    from pyramidscheme_jl_spark.sources.catalog import read_level, read_level_rows_local, stored_levels
+
+    n = 0
+    for z in stored_levels(path):
+        for b in windows:
+            df = read_level(spark, path, z)
+            if b is not None:
+                df = df.where(F.col("tx").between(b[0], b[1]) & F.col("ty").between(b[2], b[3]))
+            want = sorted(_canon(r.asDict()) for r in df.collect())
+            got = sorted(_canon(r) for r in read_level_rows_local(path, z, b).to_dict("records"))
+            assert got == want, f"z={z} window={b}"
+            n += len(want)
+    return n
+
+
+def _job_ids(spark, fn, group):
+    """Spark job ids launched while ``fn`` runs, via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _ingest_batches(spark, tmp_path, batches, G=4, layout="delta"):
+    """Stream ``batches`` (lists of image rows) into one pyramid in order."""
+    from pyramidscheme_jl_spark.streaming.ingest import ingest_images
+
+    src = tmp_path / "src"
+    src.mkdir(parents=True)
+    q_path = str(tmp_path / "pyr")
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, IMAGES_DDL).coalesce(2).write.parquet(str(src / f"b{i}"))
+        ingest_images(spark, f"{src}/*", q_path, G=G, layout=layout).awaitTermination(120)
+    return q_path
+
+
+def _overwrite_batches(G=4, n=3):
+    """A full first batch, then ``n`` batches each overwriting a few
+    overlapping slots with constant pixels (value = batch number)."""
+    from pyramidscheme_jl_spark.sources.synth import image_row
+
+    batches = [synth_images(G=G)]
+    for b in range(1, n + 1):
+        rows = []
+        for slot in {0, b, G + b, (b * 5) % (G * G)}:
+            r = dict(image_row(slot, G=G))
+            r["bytes"] = np.full((256, 256), 10 * b, dtype=np.uint8).tobytes()
+            rows.append(r)
+        batches.append(rows)
+    return batches
+
+
+def _overwrite_oracle(G, batches):
+    base = mosaic_pixels(G=G).copy()
+    for rows in batches[1:]:
+        for r in rows:
+            i = int(r["image_id"].split("-")[-1])
+            gx, gy = i % G, i // G
+            base[gy * 256 : (gy + 1) * 256, gx * 256 : (gx + 1) * 256] = np.frombuffer(
+                r["bytes"], np.uint8
+            ).reshape(256, 256)
+    return base
+
+
+def test_local_read_parity_bulk_builds(spark, pyr, tmp_path):
+    """Default bulk build, per-level (``fused_levels=1``) build and the
+    levels-only float32 production build all read back identically."""
+    images = spark.createDataFrame(synth_images(G=8), IMAGES_DDL)
+    assert _assert_local_parity(spark, pyr[0])
+    p1 = str(tmp_path / "perlevel")
+    build_pyramid(spark, images, p1, G=8, run_id="pl", fused_levels=1)
+    assert _assert_local_parity(spark, p1)
+    p2 = str(tmp_path / "levelsonly")
+    build_pyramid(spark, images, p2, G=8, run_id="lo", materialize_base=False, level_dtype="float32")
+    assert _assert_local_parity(spark, p2)
+
+
+def test_local_read_parity_streamed_delta_and_compacted(spark, tmp_path):
+    """Delta-layout stream after 3 overwriting batches (several versions of
+    a tile on disk: last-writer-wins must pick the same row as Spark's
+    window dedup), then the same pyramid after ``compact_pyramid``."""
+    import glob
+    import shutil
+
+    from pyramidscheme_jl_spark.api import PyramidDataset
+    from pyramidscheme_jl_spark.sources.catalog import level_path
+    from pyramidscheme_jl_spark.streaming.ingest import compact_pyramid
+
+    batches = _overwrite_batches()
+    q_path = _ingest_batches(spark, tmp_path, batches)
+    assert len(glob.glob(f"{level_path(q_path, 0)}/delta-b*.parquet")) >= 4
+    assert _assert_local_parity(spark, q_path)
+    oracle = oracle_levels(_overwrite_oracle(4, batches), "mean", 2)
+    ds = PyramidDataset.open(spark, q_path)
+    for z in (0, 1, 2):
+        np.testing.assert_array_equal(ds.read(z), oracle[z])
+    w = ds.read_window((0, 0, 600, 300), (1024, 512))
+    assert w["z"] == 0
+    np.testing.assert_array_equal(w["data"], oracle[0][:300, :600])
+
+    c_path = str(tmp_path / "compacted")
+    shutil.copytree(q_path, c_path)
+    assert set(compact_pyramid(spark, c_path, run_id="c")) == {0, 1, 2}
+    assert _assert_local_parity(spark, c_path)
+    for z in (0, 1, 2):
+        np.testing.assert_array_equal(PyramidDataset.open(spark, c_path).read(z), oracle[z])
+
+
+def test_local_read_parity_filewise_stream(spark, tmp_path):
+    batches = _overwrite_batches(n=2)
+    q_path = _ingest_batches(spark, tmp_path, batches, layout="filewise")
+    assert _assert_local_parity(spark, q_path)
+    from pyramidscheme_jl_spark.api import PyramidDataset
+
+    oracle = oracle_levels(_overwrite_oracle(4, batches), "mean", 2)
+    np.testing.assert_array_equal(PyramidDataset.open(spark, q_path).read(1), oracle[1])
+
+
+def test_local_read_name_pruning_skips_files(spark, tmp_path):
+    """Files whose NAME proves they hold no window key are never opened:
+    a garbage file named like a filewise tile or a bounded delta file
+    outside the window is skipped, one inside it is read (and fails)."""
+    import os
+
+    from pyramidscheme_jl_spark.sources.catalog import level_path, read_level_rows_local
+
+    q_path = _ingest_batches(spark, tmp_path, [synth_images(G=4)], layout="filewise")
+    d1 = level_path(q_path, 1)
+    bad = os.path.join(d1, "tile-000009-000009.parquet")
+    with open(bad, "w") as f:
+        f.write("not parquet")
+    assert len(read_level_rows_local(q_path, 1, (0, 1, 0, 1))) == 4
+    with pytest.raises(Exception):
+        read_level_rows_local(q_path, 1, (0, 9, 0, 9))
+    os.remove(bad)
+
+    q2 = _ingest_batches(spark, tmp_path / "delta", [synth_images(G=4)])
+    d0 = level_path(q2, 0)
+    with open(os.path.join(d0, "delta-b00000099-p00099-x500-600-y500-600.parquet"), "w") as f:
+        f.write("not parquet")
+    assert len(read_level_rows_local(q2, 0, (0, 3, 0, 3))) == 16
+    with pytest.raises(Exception):
+        read_level_rows_local(q2, 0, (0, 550, 0, 550))
+
+
+def test_local_read_parity_bands_and_ragged(spark, tmp_path):
+    """c=3 band stack and a prebuilt base that is not a tile multiple
+    (700x500: ragged right/bottom tiles at every level)."""
+    from pyramidscheme_jl_spark.api import PyramidDataset
+    from pyramidscheme_jl_spark.functions.codec import encode_tile
+    from pyramidscheme_jl_spark.functions.reducers import block_reduce
+    from pyramidscheme_jl_spark.sources.prebuilt import PREBUILT_SCHEMA, from_prebuilt_levels
+    from pyramidscheme_jl_spark.sources.synth import image_pixels, image_row
+
+    rows = []
+    for i in range(9):
+        img = image_pixels(i % 3, i // 3)
+        rows.append({**image_row(i, 3), "bytes": encode_tile(np.dstack([img, img // 2, img // 4]))})
+    images = spark.createDataFrame(
+        rows, "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
+    )
+    rgb = str(tmp_path / "rgb")
+    spec = build_pyramid(spark, images, rgb, G=3, reducer="mean", run_id="rgb")
+    assert _assert_local_parity(spark, rgb)
+    arr, *_, z = read_window(spark, rgb, spec, (100, 50, 700, 400), (1024, 512))
+    assert z == 0 and arr.shape == (350, 600, 3)
+    np.testing.assert_array_equal(arr[:, :, 1], mosaic_pixels(G=3)[50:400, 100:700] // 2)
+
+    base = mosaic_pixels(G=3)[:500, :700].astype(np.float64)
+    planes = [base]
+    for _ in range(2):
+        planes.append(block_reduce(planes[-1], "mean"))
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(0, z, p.shape[1], p.shape[0], "float64", p.tobytes()) for z, p in enumerate(planes)],
+        PREBUILT_SCHEMA,
+    ).write.parquet(src)
+    dest = str(tmp_path / "ragged")
+    rspec = from_prebuilt_levels(spark, src, dest)
+    assert (rspec.base_w, rspec.base_h) == (700, 500)
+    assert _assert_local_parity(spark, dest)
+    ds = PyramidDataset.open(spark, dest)
+    for z in range(rspec.nlevels + 1):
+        np.testing.assert_array_equal(ds.read(z), planes[z])
+    w = ds.read_window((300, 200, 700, 500), (1024, 512))
+    assert w["z"] == 0
+    np.testing.assert_array_equal(w["data"], planes[0][200:500, 300:700])
+
+
+def test_local_read_non_intersecting_window(spark, pyr):
+    from pyramidscheme_jl_spark.sources.catalog import read_level_rows_local
+
+    path, spec = pyr
+    assert len(read_level_rows_local(path, 0, (50, 60, 50, 60))) == 0
+    assert _assert_local_parity(spark, path, windows=((50, 60, 50, 60), (4, 4, 0, 3))) == 0
+    arr, ax, ay, _ = read_window(spark, path, spec, (-500, -500, -1, -1), (256, 256))
+    assert arr.size == 0 and ax.size == 0 and ay.size == 0
+
+
+def test_viewport_and_level_reads_launch_no_spark_job(spark, pyr):
+    """``read_window`` and ``read(z)`` are driver-local: no Spark job runs
+    in their job group. The positive control proves the probe sees jobs."""
+    from pyramidscheme_jl_spark.api import PyramidDataset
+    from pyramidscheme_jl_spark.sources.catalog import read_level
+
+    path, spec = pyr
+    ds = PyramidDataset.open(spark, path)
+    assert _job_ids(spark, lambda: read_level(spark, path, 1).count(), "psjl-control")
+    assert _job_ids(spark, lambda: ds.read_window((100, 200, 900, 700), (1024, 512)), "psjl-window") == []
+    assert _job_ids(spark, lambda: ds.read_window((0, 0, 1024, 1024), (256, 256)), "psjl-window-z2") == []
+    assert _job_ids(spark, lambda: ds.read(1), "psjl-read-z") == []
+
+
+def test_read_window_levels_only_pyramid_falls_back_to_finest(spark, tmp_path):
+    """A levels-only pyramid (``materialize_base=False``) stores no z=0: a
+    viewport that plans z=0 reads the finest stored level (z=1) and says
+    so; any other missing level still raises naming its path."""
+    import shutil
+
+    from pyramidscheme_jl_spark.api import PyramidDataset
+    from pyramidscheme_jl_spark.plans.grid import agg_axis
+
+    path = str(tmp_path / "lo")
+    images = spark.createDataFrame(synth_images(G=4), IMAGES_DDL)
+    spec = build_pyramid(spark, images, path, G=4, run_id="lo", materialize_base=False)
+    oracle = oracle_levels(mosaic_pixels(G=4), "mean", 2)
+    arr, ax, ay, z = read_window(spark, path, spec, (100, 200, 300, 350), (256, 256))
+    assert z == 1
+    np.testing.assert_allclose(arr, oracle[1][100:175, 50:150], rtol=1e-12)
+    np.testing.assert_array_equal(ax, agg_axis(np.arange(1024) + 0.5, 2)[50:150])
+    # levels above the floor plan as before
+    arr2, *_, z2 = read_window(spark, path, spec, (0, 0, 1024, 1024), (256, 256))
+    assert z2 == 2
+    np.testing.assert_allclose(arr2, oracle[2], rtol=1e-12)
+    with pytest.raises(FileNotFoundError, match="z=0"):
+        PyramidDataset.open(spark, path).read(0)
+    shutil.rmtree(f"{path}/tiles/z=2")
+    with pytest.raises(FileNotFoundError, match="z=2"):
+        read_window(spark, path, spec, (0, 0, 1024, 1024), (256, 256))
